@@ -106,6 +106,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+# Columns of every deletion-vector sidecar (_write_dv_sidecar): the victim
+# file's base name and its _metadata.row_index. Reading sidecars under this
+# constant skips Spark's schema-inference job.
+DV_SIDECAR_SCHEMA = StructType(
+    [StructField("data_file", StringType()), StructField("pos", LongType())]
+)
 
 
 class ConflictError(RuntimeError):
@@ -3530,9 +3538,8 @@ class SnapshotTable:
             "__dv_pos", F.col("_metadata.row_index")
         )
         dead = (
-            self.spark.read.parquet(
-                *[os.path.join(self.path, d) for d in needed]
-            )
+            self.spark.read.schema(DV_SIDECAR_SCHEMA)
+            .parquet(*[os.path.join(self.path, d) for d in needed])
             .select(
                 F.col("data_file").alias("__dv_file"),
                 F.col("pos").alias("__dv_pos"),
@@ -5010,9 +5017,12 @@ class SnapshotTable:
         dvs = dict(m.get("dvs", {}))
         already = sorted({dv for rel in rels for dv in dvs.get(rel, [])})
         if already:
-            dead0 = self.spark.read.parquet(
-                *[os.path.join(self.path, d) for d in already]
-            ).select("data_file", "pos").distinct()
+            dead0 = (
+                self.spark.read.schema(DV_SIDECAR_SCHEMA)
+                .parquet(*[os.path.join(self.path, d) for d in already])
+                .select("data_file", "pos")
+                .distinct()
+            )
             scan = scan.join(dead0, ["data_file", "pos"], "left_anti")
         hits = scan.join(
             k.select(F.col(key).alias("__k")), "__k", "left_semi"
@@ -5265,9 +5275,8 @@ class SnapshotTable:
         already = sorted({dv for rel in rels for dv in dvs.get(rel, [])})
         if already:
             dead0 = (
-                self.spark.read.parquet(
-                    *[os.path.join(self.path, d) for d in already]
-                )
+                self.spark.read.schema(DV_SIDECAR_SCHEMA)
+                .parquet(*[os.path.join(self.path, d) for d in already])
                 .select(
                     F.col("data_file").alias("__dv_file"),
                     F.col("pos").alias("__dv_pos"),

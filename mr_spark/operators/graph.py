@@ -46,7 +46,7 @@ _COMP_CTES = """
       SELECT doc_a, doc_b FROM (
         WITH toks AS (
           SELECT doc_id,
-                 list_filter(regexp_split_to_array(text, '[^\p{L}]+'), x -> x <> '') AS ws
+                 list_filter(regexp_split_to_array(text, '[^\\p{L}]+'), x -> x <> '') AS ws
           FROM documents
         ), tri AS (
           SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g

@@ -14,7 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import normalize_event_ts
+from ..sources import normalize_event_ts, parquet_schema
 from . import query
 
 _SINK = "mrspark_stream_hourly"
@@ -38,7 +38,7 @@ def stream_hourly_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds exactly; the append-mode + watermark variant (late-data handling)
     is exercised in tests/test_streaming.py."""
     path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     # the file stream source takes a directory; pathGlobFilter selects the
     # events table out of the sf_dir
     stream = (
@@ -280,7 +280,7 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import run_to_completion
 
     path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -420,7 +420,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import run_to_completion
 
     replay = _ordered_events_replay(spark, sf_dir)
-    schema = spark.read.parquet(replay).schema
+    schema = parquet_schema(spark, replay)
     # the cutoff anchors to the COMBINED final watermark, which under the
     # default multipleWatermarkPolicy=min is the MINIMUM over both sides'
     # own event-time maxima (each side's watermark advances only on the
@@ -586,7 +586,7 @@ def stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import run_to_completion
 
     replay = _ordered_events_replay(spark, sf_dir)
-    schema = spark.read.parquet(replay).schema
+    schema = parquet_schema(spark, replay)
     mx = (
         load_table(spark, sf_dir, "events")
         .agg(

@@ -7,10 +7,12 @@ Here that is ``whole_text_files``; the analytics tier reads typed parquet.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TPCH_TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -37,10 +39,62 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+# Session confs that change how Spark maps a parquet footer to a schema.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _footer_digest(path: str) -> bytes | None:
+    """Digest of a parquet file's footer (thrift FileMetaData + length +
+    magic), or None when the file does not end in a plain parquet footer.
+    The footer alone determines Spark's single-file schema inference."""
+    with open(path, "rb") as f:
+        size = f.seek(0, os.SEEK_END)
+        if size < 12:
+            return None
+        f.seek(size - 8)
+        tail = f.read(8)
+        n = int.from_bytes(tail[:4], "little")
+        if tail[4:] != b"PAR1" or n + 12 > size:
+            return None
+        f.seek(size - 8 - n)
+        return hashlib.blake2b(f.read(n) + tail, digest_size=16).digest()
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, memoised per
+    process under the file's footer digest and the session confs that
+    shape inference. Inference is a Spark job of its own (~55 ms on a
+    4-CPU box); a hit costs a footer read and five conf lookups. Keyed
+    on footer bytes, not on (inode, size, mtime): writers rewrite paths
+    in place, and mtime granularity is filesystem-dependent. Anything that is not a local
+    regular parquet file goes straight to Spark, errors included. The
+    returned StructType is shared between callers: do not mutate it."""
+    try:
+        digest = _footer_digest(path) if os.path.isfile(path) else None
+    except OSError:
+        digest = None
+    if digest is None:
+        return spark.read.parquet(path).schema
+    key = (digest, *(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one parquet table. Columnar scan → Catalyst gets predicate
-    pushdown + column pruning for free."""
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    pushdown + column pruning for free; the schema comes from
+    ``parquet_schema``, so repeat loads launch no inference job."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df

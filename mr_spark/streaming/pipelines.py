@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import normalize_event_ts
+from ..sources import normalize_event_ts, parquet_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
@@ -35,7 +35,7 @@ def events_file_stream(
 ) -> DataFrame:
     """File-source stream with the events schema; handles the testdata's
     TIMESTAMP(NANOS) parquet (read as long + truncated to µs)."""
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     glob = None
     if path.endswith(".parquet") and not os.path.isdir(path):
         glob, path = os.path.basename(path), os.path.dirname(path)

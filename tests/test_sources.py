@@ -6,7 +6,9 @@ checked against the sequential oracle."""
 from __future__ import annotations
 
 import os
+import uuid
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -15,6 +17,7 @@ from mr_spark.engine import get_app, run_mapreduce, run_sequential, save_text_ou
 from mr_spark.engine.sequential import to_text_lines
 from mr_spark.sources import (
     load_table,
+    parquet_schema,
     read_csv,
     read_json,
     whole_text_files,
@@ -111,6 +114,86 @@ def test_orc_round_trip(spark, tmp_path):
     orig.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     assert sorted(back.collect()) == sorted(orig.collect())
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_memoises_schema_inference(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"k": [1, 2, 3], "s": ["a", "b", "c"]}),
+                   tmp_path / "t.parquet")
+    path = str(tmp_path / "t.parquet")
+    first, n_first = _jobs_run(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    again, n_again = _jobs_run(spark, lambda: load_table(spark, str(tmp_path), "t"))
+    assert n_first >= 1  # the one inference job
+    assert n_again == 0
+    assert again.schema == first.schema == spark.read.parquet(path).schema
+    assert parquet_schema(spark, path) == spark.read.parquet(path).schema
+    assert sorted(again.collect()) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_parquet_schema_reinfers_file_rewritten_in_place(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"ab": [1, 2]}), path)
+    size = os.path.getsize(path)
+    assert parquet_schema(spark, path).names == ["ab"]
+    pq.write_table(pa.table({"cd": [1, 2]}), path)
+    assert os.path.getsize(path) == size  # a stat key could not tell
+    assert parquet_schema(spark, path).names == ["cd"]
+    assert load_table(spark, str(tmp_path), "t").columns == ["cd"]
+
+
+def test_parquet_schema_keys_on_session_confs(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    ns = str(tmp_path / "ns.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1_000_000_123], pa.timestamp("ns"))}), ns)
+    us = str(tmp_path / "us.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1_000_000], pa.timestamp("us"))}), us)
+    nanos, ntz = ("spark.sql.legacy.parquet.nanosAsLong",
+                  "spark.sql.parquet.inferTimestampNTZ.enabled")
+    saved = {c: spark.conf.get(c) for c in (nanos, ntz)}
+    try:
+        spark.conf.set(nanos, "true")
+        assert parquet_schema(spark, ns)["ts"].dataType == T.LongType()
+        # Spark 4 refuses TIMESTAMP(NANOS) without nanosAsLong; the memo
+        # must not hand back the bigint schema instead
+        spark.conf.set(nanos, "false")
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            parquet_schema(spark, ns)
+        spark.conf.set(ntz, "true")
+        assert parquet_schema(spark, us)["ts"].dataType == T.TimestampNTZType()
+        spark.conf.set(ntz, "false")
+        assert parquet_schema(spark, us)["ts"].dataType == T.TimestampType()
+    finally:
+        for c, v in saved.items():
+            spark.conf.set(c, v)
+
+
+def test_load_table_missing_path_raises_spark_error(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_table(spark, str(tmp_path), "absent")
 
 
 def test_whole_text_datasource(spark, tmp_path):

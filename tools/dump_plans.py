@@ -1,13 +1,21 @@
-"""Regenerate PLANS.md: formatted physical plans of the headline queries
-with a one-line shuffle/broadcast summary each. Run after changing any
-operator: python tools/dump_plans.py"""
+"""Dump formatted physical plans with a one-line shuffle/broadcast
+summary each.
+
+    python tools/dump_plans.py                 # headline queries -> PLANS.md
+    python tools/dump_plans.py --out plans/rNN --tag before q1 q3 ...
+
+With --out, each query's plan goes to DIR/<query>_<tag>.txt (DIR/<query>.txt
+without --tag): before/after evidence for a plan change. Run the default
+form after changing any operator."""
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from mr_spark import operators as ops
 from mr_spark import plans
@@ -140,8 +148,20 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def main() -> None:
-    spark = get_spark("dump-plans", cpus=8)
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("queries", nargs="*", help="query names (default: the headline set)")
+    ap.add_argument("--out", metavar="DIR", help="one plan file per query in DIR instead of PLANS.md")
+    ap.add_argument("--tag", default="", help="file-name suffix under --out, e.g. before/after")
+    ap.add_argument("--sf-dir", default=SF_DIR, help=f"table directory (default {SF_DIR})")
+    args = ap.parse_args()
+    names = args.queries or HEADLINE
+    spark = get_spark("dump-plans", cpus=8, extra_conf={"spark.ui.showConsoleProgress": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
     qs = ops.queries()
+    if args.out:
+        os.makedirs(args.out, exist_ok=True)
     out = [
         "# PLANS — physical plans of the headline queries",
         "",
@@ -151,24 +171,27 @@ def main() -> None:
         "before each exchange, and the exchange count per query.",
         "",
     ]
-    for name in HEADLINE:
-        df = qs[name](spark, SF_DIR)
+    for name in names:
+        df = qs[name](spark, args.sf_dir)
         # escape control chars (e.g. triangle_count's \x00 key separator
         # literal) — a single NUL makes grep treat PLANS.md as binary
         plan = plans.formatted(df).replace("\x00", "\\x00")
-        n_ex = plan.count(") Exchange")
-        n_bc = plan.count("BroadcastHashJoin")
-        out.append(f"## {name}")
-        out.append("")
-        out.append(f"exchanges: {n_ex} · broadcast joins: {n_bc}")
-        out.append("")
-        out.append("```")
-        out.append(plan.strip())
-        out.append("```")
-        out.append("")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
+        summary = (
+            f"exchanges: {plan.count(') Exchange')} · "
+            f"broadcast joins: {plan.count('BroadcastHashJoin')}"
+        )
+        spark.catalog.clearCache()
+        if args.out:
+            path = os.path.join(args.out, f"{name}_{args.tag}.txt" if args.tag else f"{name}.txt")
+            with open(path, "w") as f:
+                f.write(plan)
+            print(f"{name}: {summary} -> {path}")
+            continue
+        out += [f"## {name}", "", summary, "", "```", plan.strip(), "```", ""]
+    if not args.out:
+        with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
+            f.write("\n".join(out))
+        print(f"wrote PLANS.md ({len(names)} queries)")
 
 
 if __name__ == "__main__":
