@@ -19,8 +19,11 @@ volumes: local NVMe, never a throttled system disk); else the old
 from __future__ import annotations
 
 import atexit
+import logging
 import os
 import shutil
+
+_LOG = logging.getLogger("mr_spark")
 
 _WAREHOUSE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -89,14 +92,20 @@ _SWEPT = False
 
 
 _STALE_AGE_SECS = 24 * 3600
+# Name prefixes this package creates at the scratch root without a live pid
+# suffix to judge by: legacy bare-mkdtemp dirs (``mrspark_*``) and the
+# per-pid parents (``tmp_``, ``spark_local_``, ``jvm_tmp_``). Only these
+# fall to the age sweep; anything else sharing the root is not ours.
+_OWN_PREFIXES = ("mrspark_", "tmp_", "spark_local_", "jvm_tmp_")
 
 
 def _sweep_stale(base: str) -> None:
     """tmpfs is RAM: a SIGKILLed process never runs its atexit cleanup, so
     reclaim ``*_<pid>`` entries whose pid is gone (once per process; live
     processes' dirs are left alone). Entries whose suffix is not a pid
-    (legacy mkdtemp leftovers) fall back to an age sweep — anything older
-    than a day is no live session's scratch."""
+    (legacy mkdtemp leftovers) fall back to an age sweep, limited to
+    ``_OWN_PREFIXES`` — anything of ours older than a day is no live
+    session's scratch. Each reclaimed path is logged."""
     global _SWEPT
     if _SWEPT:
         return
@@ -111,13 +120,20 @@ def _sweep_stale(base: str) -> None:
             if int(pid_part) != os.getpid() and not os.path.exists(
                 f"/proc/{pid_part}"
             ):
-                shutil.rmtree(full, ignore_errors=True)
+                _reclaim(full, "dead pid")
+            continue
+        if not entry.startswith(_OWN_PREFIXES):
             continue
         try:
             if now - os.path.getmtime(full) > _STALE_AGE_SECS:
-                shutil.rmtree(full, ignore_errors=True)
+                _reclaim(full, "older than a day")
         except OSError:
             pass
+
+
+def _reclaim(path: str, why: str) -> None:
+    _LOG.info("reclaiming stale scratch %s (%s)", path, why)
+    shutil.rmtree(path, ignore_errors=True)
 
 
 _REGISTERED: set[str] = set()

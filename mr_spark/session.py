@@ -15,6 +15,9 @@ import os
 from pyspark.sql import SparkSession
 
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -169,6 +172,11 @@ def get_spark(app_name: str = "mr_spark", *, cpus: int | None = None,
 
     Shuffle partitions are sized to the core count — the 200 default is
     wrong for local mode and is re-planned by AQE on a cluster anyway.
+
+    Python workers fork from the engine's daemon (``mr_spark.worker_daemon``)
+    and find ``mr_spark`` through ``spark.executorEnv.PYTHONPATH`` whatever
+    the cwd. Both are static confs that ``tune_session`` cannot set, so an
+    externally built session keeps Spark's stock daemon.
     """
     n = cpus or default_parallelism()
     # Scratch I/O (shuffle files, spills, streaming temp checkpoints) goes
@@ -236,10 +244,23 @@ def get_spark(app_name: str = "mr_spark", *, cpus: int | None = None,
         # 100-entry default: evictions force Janino recompiles + cold JIT on
         # re-run (static conf — must be set at session build time).
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        # PySpark's worker runs importlib.invalidate_caches() at every task
+        # start, and on Python 3.11 each zipimporter then re-reads its whole
+        # archive (pyspark.zip, py4j, the spark-core jar): ~250 ms of fixed
+        # cost per Python task. The engine's daemon re-reads an archive only
+        # when its stat stamp changes. Measured by perfbench's tier_a_mr
+        # workload: traced spark.task_run_s 31.0 s -> 10.0 s on 4 CPUs.
+        .config("spark.python.daemon.module", "mr_spark.worker_daemon")
     )
     for k, v in scratch_confs.items():
         builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    # the daemon and every task import mr_spark, so its parent directory
+    # leads the workers' path, ahead of any PYTHONPATH the caller passes
+    builder = builder.config("spark.executorEnv.PYTHONPATH", os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, extra.pop("spark.executorEnv.PYTHONPATH", None))
+        if p))
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

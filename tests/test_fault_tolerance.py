@@ -10,6 +10,7 @@ runs in a subprocess with its own JVM.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -183,6 +184,68 @@ def test_jobcount_side_effects_observe_retries():
         timeout=300,
     )
     assert "JOBCOUNT_OK" in res.stdout, res.stderr[-3000:]
+
+
+CRASH_JOB = r"""
+import os, sys
+sys.path.insert(0, {root!r})
+from pyspark import TaskContext
+
+from mr_spark.engine import get_app, run_mapreduce, run_sequential
+from mr_spark.session import get_spark
+
+# local[2,4]: 2 cores, 4 attempts per task, workers from the engine's daemon
+spark = get_spark("crash", cpus=2, extra_conf={{
+    "spark.master": "local[2,4]", "spark.ui.showConsoleProgress": "false"}})
+spark.sparkContext.setLogLevel("OFF")
+sc = spark.sparkContext
+
+corpus = [(f"doc_{{i}}", f"alpha beta doc{{i}} gamma alpha") for i in range(12)]
+app = get_app("wc")
+
+
+class CrashApp:
+    # app-crash analog: attempt 0 of every map task kills its Python worker
+    # outright (no exception for the worker to report back)
+    def map(self, k, v):
+        ctx = TaskContext.get()
+        if ctx is not None and ctx.attemptNumber() == 0:
+            os._exit(1)
+        return app.map(k, v)
+
+    def reduce(self, k, vs):
+        return app.reduce(k, vs)
+
+
+sc.setJobGroup("crash", "crash injection")
+got = sorted(run_mapreduce(spark, sc.parallelize(corpus, 4), CrashApp(), n_reduce=3).collect())
+tracker = sc.statusTracker()
+failed = sum(
+    tracker.getStageInfo(stage).numFailedTasks
+    for job in tracker.getJobIdsForGroup("crash")
+    for stage in tracker.getJobInfo(job).stageIds
+)
+assert got == run_sequential(corpus, app), got[:3]
+assert failed >= 1, failed
+print("CRASH_OK", len(got), failed)
+"""
+
+
+def test_output_survives_worker_deaths():
+    """Default-gate crash injection: real Python worker deaths (``os._exit``
+    on every map task's first attempt) under ``spark.task.maxFailures``,
+    through an engine-built session; the output must still equal the
+    sequential golden, and the status tracker must show the failures."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    res = subprocess.run(
+        [sys.executable, "-c", CRASH_JOB.format(root=root)],
+        capture_output=True,
+        text=True,
+        timeout=120,
+        env=env,
+    )
+    assert "CRASH_OK" in res.stdout, res.stderr[-3000:]
 
 
 def test_ping_health_check(spark):

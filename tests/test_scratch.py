@@ -52,3 +52,25 @@ def test_sweep_reclaims_dead_pid_and_old_unparseable(tmp_path, monkeypatch):
     assert not old.exists()
     assert fresh.exists()
     assert mine.exists()
+
+
+def test_age_sweep_spares_foreign_prefixes(tmp_path, monkeypatch, caplog):
+    import logging
+    import time
+
+    old = time.time() - 2 * _demo._STALE_AGE_SECS
+    foreign = tmp_path / "someone_elses_cache"  # not a prefix we create
+    ours = tmp_path / "mrspark_stream_q1w2e3"
+    dead = tmp_path / "spark_local_999999999"  # no such pid
+    for d in (foreign, ours, dead):
+        d.mkdir()
+        os.utime(d, (old, old))
+    monkeypatch.setattr(_demo, "_SWEPT", False)
+    with caplog.at_level(logging.INFO, logger="mr_spark"):
+        _demo._sweep_stale(str(tmp_path))
+    assert foreign.exists()
+    assert not ours.exists()
+    assert not dead.exists()
+    logged = " ".join(r.getMessage() for r in caplog.records if r.name == "mr_spark")
+    assert str(ours) in logged and str(dead) in logged
+    assert str(foreign) not in logged
